@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""The repo's benchmark: two workloads through the engine's public
+"""The repo's benchmark: three workloads through the engine's public
 entry points, run from the root of a checkout.
 
     python3 perfbench/run.py --workload ingest --seed 1 --seconds 30 --trace 0
@@ -22,6 +22,8 @@ import subprocess
 import sys
 import time
 
+import pyarrow.parquet as pq
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
@@ -39,6 +41,7 @@ DEADLINE_S = 170  # a run must end within 180 s of its start (after the build)
 WORKLOADS = {
     "ingest": {"pass_s": 25.0},
     "curate_batch": {"pass_s": 35.0, "docs": 1500},
+    "curate_stream": {"pass_s": 25.0, "docs": 1000, "files": 2},
 }
 OTHER_SHARE_MAX = 0.05  # attribution self-check of a traced run
 
@@ -56,8 +59,12 @@ def inputs(workload, seed, in_dir):
         return gen.ingest_shares(expected), expected
     corpus = os.path.join(in_dir, "corpus")
     os.makedirs(corpus)
-    docs = WORKLOADS[workload]["docs"]
-    return gen.corpus(rng, docs, os.path.join(corpus, "documents.parquet")), None
+    w = WORKLOADS[workload]
+    path = os.path.join(corpus, "documents.parquet")
+    desc = gen.corpus(rng, w["docs"], path)
+    if workload == "curate_stream":
+        desc.update(gen.arrivals(path, os.path.join(in_dir, "arrivals"), w["files"]))
+    return desc, None
 
 
 def session(cp, workload, in_dir, out_dir, trace, deadline):
@@ -98,8 +105,19 @@ def checks(workload, res, expected, in_dir, tmp):
         return len(items), [f for item in items
                             for f in check.ingest_item(item, expected[item["object"]])]
     corpus = os.path.join(in_dir, "corpus", "documents.parquet")
-    return 1, check.batch_report(res["outputs"]["report"],
-                                 check.oracle(res["oracle_sql"], corpus, tmp))
+    if workload == "curate_batch":
+        [want] = check.oracle([res["oracle_sql"]], corpus, tmp)
+        return 1, check.batch_report(res["outputs"]["report"], want)
+    # the whole-doc stage's state keeps one signature row per surviving
+    # document (Dedup.minhashDedupIncremental)
+    survivors = pq.read_table(os.path.join(res["state_dir"], "whole"),
+                              columns=["id"]).column("id").to_pylist()
+    arrivals = os.path.join(in_dir, "arrivals")
+    batch_of = {i: k for k, f in enumerate(sorted(os.listdir(arrivals)))
+                for i in pq.read_table(os.path.join(arrivals, f)).column("doc_id").to_pylist()}
+    return 1, check.stream_report(
+        res["outputs"], *check.stream_oracles(res["oracle_sql"], corpus, tmp, survivors),
+        batch_of, survivors, WORKLOADS[workload]["files"])
 
 
 def end_to_end(runs):
@@ -109,7 +127,7 @@ def end_to_end(runs):
         "setup_s": (med(r["setup_s"] for r in runs), "s"),
         "run_s": (med(r["run_s"] for r in runs), "s"),
         "item_p50_s": (med(items), "s"),
-        # p90 by nearest rank: a run's 19 (or 1) items support no
+        # p90 by nearest rank: a run's 12, 2 or 1 items support no
         # percentile with ten items beyond it
         "item_tail_s": (items[math.ceil(0.9 * len(items)) - 1], "s"),
         "cpu_s": (med(r["cpu_s"] for r in runs), "s"),
@@ -122,12 +140,13 @@ UNITS = {"core_busy": "ratio", "overhead": "ratio", "other_job_share": "ratio",
 
 def per_layer(runs):
     """Each layer counter of the traced sessions (their median), plus the
-    on-disk sink size and peak memory.
+    on-disk size of the sink output and the stream state, and peak memory.
     """
     for r in runs:
-        size, files = check.tree_size(os.path.join(r["out_dir"], "ds"))
-        r["layers"].update({"io.sink_mb": size / 2 ** 20, "io.sink_files": files,
-                            "jvm.mem_peak_mb": r["mem_peak_mb"]})
+        r["layers"]["jvm.mem_peak_mb"] = r["mem_peak_mb"]
+        for layer, key in (("io.sink", "sink_dir"), ("streaming.state", "state_dir")):
+            size, files = check.tree_size(r[key]) if r[key] else (0, 0)
+            r["layers"].update({f"{layer}_mb": size / 2 ** 20, f"{layer}_files": files})
     layers = {k: statistics.median(r["layers"][k] for r in runs) for k in runs[0]["layers"]}
     for key in ("queries.build_s", "queries.exec_s", "grid.detect_s", "io.xlsx_read_s"):
         layers.setdefault(key, 0.0)
@@ -154,7 +173,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--keep", action="store_true", help="keep the work directory")
     a = ap.parse_args()
     # on SIGTERM, unwind through the finally blocks that stop the JVM
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
@@ -194,8 +212,7 @@ def main():
             "metrics": {k: {"value": v, "unit": u} for k, (v, u) in sorted(metrics.items())},
         }))
     finally:
-        if not a.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -8,10 +8,14 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.BenchBus
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import graft.ext.Text
 import graft.grid.{Grid, TableDetect}
 import graft.io.XlsxReader
 import graft.pipeline.Ingest
 import graft.queries.Registry
+import graft.streaming.{CurateStream, FunnelStream}
 
 /** One benchmark session: builds the Spark session, does the workload's
   * set-up, runs one timed pass and writes `result.json` into the output
@@ -28,12 +32,18 @@ object Runner {
   final case class Pass(items: Seq[Double], extra: Map[String, Double],
       outputs: () => Map[String, Any])
 
+  /** Directories whose size `run.py` reports: the sink's output and the
+    * stream's state.
+    */
+  final case class Dirs(sink: Option[String] = None, state: Option[String] = None)
+
   trait Workload {
     /** Untimed work a user pays once per process. */
     def setUp(): Unit
     def pass(): Pass
     /** Direct timings of driver-side kernels that launch no Spark job. */
     def kernels(): Map[String, Double] = Map.empty
+    def dirs: Dirs = Dirs()
   }
 
   def main(argv: Array[String]): Unit = {
@@ -45,6 +55,7 @@ object Runner {
       val w: Workload = opt("workload") match {
         case "ingest" => new IngestW(spark, in, out)
         case "curate_batch" => new BatchW(spark, in)
+        case "curate_stream" => new StreamW(spark, in, out)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }
       w.setUp()
@@ -71,6 +82,8 @@ object Runner {
         "mem_peak_mb" -> peakRssMb(),
         "outputs" -> pass.outputs(),
         "layers" -> layers.orNull,
+        "sink_dir" -> w.dirs.sink.orNull,
+        "state_dir" -> w.dirs.state.orNull,
         "oracle_sql" -> oracleSql(opt("workload")).orNull)
       Files.write(Paths.get(out, "result.json"),
         new ObjectMapper().registerModule(DefaultScalaModule)
@@ -80,6 +93,7 @@ object Runner {
 
   private def oracleSql(workload: String): Option[String] = workload match {
     case "curate_batch" => Registry.byName("x_pipeline_master").oracle
+    case "curate_stream" => Registry.byName("x_curate_stream_master").oracle
     case _ => None
   }
 
@@ -150,7 +164,7 @@ object Runner {
 
     def setUp(): Unit =
       lines(s"$in/warmup.txt").zipWithIndex.foreach { case (f, i) =>
-        one(s"$in/objects/$f", s"$out/ds/warmup_$i", s"warmup_$i")
+        one(s"$in/objects/$f", s"$out/warmup/w$i", s"w$i")
       }
 
     def pass(): Pass = {
@@ -159,6 +173,8 @@ object Runner {
       }
       Pass(results.map(_._2), Map.empty, () => Map("items" -> results.map(_._1)))
     }
+
+    override def dirs: Dirs = Dirs(sink = Some(s"$out/ds"))
 
     override def kernels(): Map[String, Double] = {
       val (books, readS) = timed(objects.filter(_.endsWith(".xlsx"))
@@ -189,6 +205,62 @@ object Runner {
         () => Map("report" -> df.collect().toSeq.map(r =>
           Map("stage_idx" -> r.getInt(0), "stage" -> r.getString(1),
             "n_docs" -> r.getLong(2), "n_tokens" -> r.getLong(3)))))
+    }
+  }
+
+  /** `CurateStream.curateStream` over the arrival files, one file per
+    * micro-batch (`maxFilesPerTrigger` 1, `Trigger.AvailableNow`), into
+    * fresh state. Set-up trains the reference LM and derives the
+    * fluency cutoff, which a user pays once per stream start. An item is
+    * a micro-batch, timed by its `triggerExecution` duration. The last
+    * cumulative report row is read back after the timed part.
+    */
+  final class StreamW(spark: SparkSession, in: String, out: String) extends Workload {
+    private val docs = spark.read.parquet(s"$in/corpus/documents.parquet")
+    private var lm: Text.BigramLm = _
+    private var cut: (Double, Long) = _
+
+    def setUp(): Unit = {
+      lm = Text.bigramLmTrain(docs, "text")
+      cut = FunnelStream.fluencyCutoff(docs, "text", "doc_id", model = Some(lm))
+    }
+
+    override def dirs: Dirs = Dirs(sink = Some(s"$out/stream"), state = Some(s"$out/state"))
+
+    def pass(): Pass = {
+      val arrivals = spark.readStream
+        .schema(spark.read.parquet(s"$in/arrivals").schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(s"$in/arrivals")
+      // Spark pins the query's creation call site on its thread, so every
+      // job would read as launched by `curateStream`. The start event is
+      // delivered on that thread before the first batch: clear the pin
+      // there, and each job's call site is the code that launched it, as
+      // in a batch job.
+      val unpin = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+          spark.sparkContext.clearCallSite()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      }
+      spark.streams.addListener(unpin)
+      // the stream's own jobs (source reads, sink commits) belong to
+      // `streaming`; the query thread inherits this property
+      spark.sparkContext.setLocalProperty("perfbench.module", "streaming")
+      val q = CurateStream.curateStream(arrivals, s"$out/state", s"$out/stream",
+        s"$out/checkpoint", docs, cut._1, cut._2, docs.filter(col("doc_id") < 20),
+        "text", "tinj", "doc_id", model = Some(lm))
+      spark.sparkContext.setLocalProperty("perfbench.module", null)
+      q.awaitTermination()
+      spark.streams.removeListener(unpin)
+      val batches = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+      Pass(batches.map(_.durationMs.get("triggerExecution").toDouble / 1000.0), Map.empty,
+        () => {
+          val last = spark.read.parquet(s"$out/stream/report")
+            .orderBy(col("batch_id").desc).head()
+          Map("batches" -> batches.size, "report" -> last.schema.fieldNames
+            .filter(_.startsWith("c_")).map(c => c -> last.getAs[Long](c)).toMap)
+        })
     }
   }
 }

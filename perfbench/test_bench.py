@@ -72,6 +72,28 @@ class Inputs(unittest.TestCase):
             else:
                 self.assertNotEqual(first, files)
 
+    def test_arrivals_split_the_corpus_in_id_order(self):
+        desc, _, _ = self.generate("curate_stream", 4)
+        w = run.WORKLOADS["curate_stream"]
+        self.assertEqual(desc["arrival_files"], w["files"])
+        self.assertEqual(desc["arriving_docs"], w["docs"] - gen.N_EVAL)
+        d = tempdir(self)
+        run.inputs("curate_stream", 4, d)
+        corpus = pq.read_table(os.path.join(d, "corpus", "documents.parquet"))
+        parts = [pq.read_table(os.path.join(d, "arrivals", f))
+                 for f in sorted(os.listdir(os.path.join(d, "arrivals")))]
+        self.assertEqual(len(parts), w["files"])
+        ids = [i for p in parts for i in p.column("doc_id").to_pylist()]
+        self.assertEqual(ids, list(range(gen.N_EVAL, w["docs"])))
+        texts = [x for p in parts for x in p.column("text").to_pylist()]
+        self.assertEqual(texts, corpus.column("text").to_pylist()[gen.N_EVAL:])
+        mtimes = [os.path.getmtime(os.path.join(d, "arrivals", f))
+                  for f in sorted(os.listdir(os.path.join(d, "arrivals")))]
+        self.assertEqual(mtimes, sorted(set(mtimes)))
+        self.assertEqual(gen._injected(35, "a b"), "a b\ufffd\ufffd\ufffd\ufffd\x07\x01\x7f")
+        self.assertEqual(gen._injected(1001, "a"), "a\ufffd\ufffd\x85\x96 ### ... 123")
+        self.assertEqual(gen._injected(1, "a"), "a")
+
     def test_corpus_schema(self):
         path = os.path.join(tempdir(self), "documents.parquet")
         gen.corpus(random.Random(3), 300, path)
@@ -116,11 +138,57 @@ class Checks(unittest.TestCase):
                    CAST(COUNT(*) AS BIGINT) AS n_docs,
                    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
                  FROM documents"""
-        want = check.oracle(sql, path, self.dir)
+        [want] = check.oracle([sql], path, self.dir)
         self.assertEqual(want, [{"stage_idx": 0, "stage": "corpus", "n_docs": 3, "n_tokens": 6}])
         self.assertEqual(check.batch_report([dict(want[0])], want), [])
         self.assertEqual(len(check.batch_report([dict(want[0], n_tokens=7)], want)), 1)
         self.assertEqual(len(check.batch_report([], want)), 1)
+
+    def test_stream_report(self):
+        counters = check.PURE_COUNTERS + check.DEDUP_COUNTERS
+        replayed = {c: 10 + k for k, c in enumerate(counters)}
+        # 20 and 21 arrive in batch 0; 30 is near 20 (Jaccard 0.58) and
+        # 31 is far from both (0.05), both in batch 1
+        words = [f"w{i}" for i in range(20)]
+        c6 = [{"doc_id": 20, "text": " ".join(words[:12]), "kept": True},
+              {"doc_id": 21, "text": " ".join(words[10:20]), "kept": True},
+              {"doc_id": 30, "text": " ".join(words[:9] + ["x", "y"]), "kept": False},
+              {"doc_id": 31, "text": " ".join(words[:3] + [f"z{i}" for i in range(9)]),
+               "kept": True}]
+        batch_of = {20: 0, 21: 0, 30: 1, 31: 1}
+        got = {"batches": 2, "report": dict(replayed)}
+
+        def report(out=got, survivors=(20, 21, 31)):
+            return check.stream_report(out, c6, replayed, batch_of,
+                                       list(survivors), 2)
+
+        self.assertEqual(report(), [])
+        # the near pair crosses the batches: either verdict is allowed
+        self.assertEqual(report(survivors=(20, 21, 30, 31)), [])
+        # a far document must keep its one-shot verdict, as must any
+        # document of the first batch
+        self.assertEqual(len(report(survivors=(20, 21))), 1)
+        self.assertEqual(len(report(survivors=(21, 31))), 1)
+        self.assertEqual(len(report(survivors=(20, 21, 31, 99))), 1)
+        for c in counters:
+            perturbed = {"batches": 2, "report": dict(replayed, **{c: replayed[c] - 1})}
+            self.assertEqual(len(report(perturbed)), 1, c)
+        self.assertEqual(len(report(dict(got, batches=1))), 1)
+
+    def test_stream_oracles_split_the_registered_oracle(self):
+        sql = ("WITH c6 AS (SELECT doc_id, text FROM documents), "
+               "cwrm AS (SELECT 2 AS doc_id), "
+               "c7 AS (SELECT * FROM c6 WHERE doc_id NOT IN (SELECT doc_id FROM cwrm)) "
+               "SELECT CAST(0 AS BIGINT) AS batch_id, "
+               "(SELECT COUNT(*) FROM c7) AS c_whole_doc")
+        path = os.path.join(tempdir(self), "documents.parquet")
+        pq.write_table(pa.table({"doc_id": [1, 2, 3], "text": ["a", "b", "c"]}), path)
+        c6, replayed = check.stream_oracles(sql, path, tempdir(self), [1, 2, 2])
+        self.assertEqual([(r["doc_id"], r["kept"]) for r in c6],
+                         [(1, True), (2, False), (3, True)])
+        self.assertEqual(replayed["c_whole_doc"], 2)
+        with self.assertRaises(ValueError):
+            check.stream_oracles(sql.replace("cwrm)", "cwrm2)"), path, tempdir(self), [])
 
     def test_attribution_self_check(self):
         ok = {"trace.other_job_share": 0.05, "trace.other_job_s_share": 0.0}
